@@ -527,7 +527,7 @@ def compact_lsh_index(
     spark, table: str, *, keep_last: int = 2
 ) -> dict[str, int]:
     """Maintenance pass for the at-rest LSH index — the bucketed-table
-    sibling of ``compact_ivf_index``: every
+    sibling of ``ivf_store.compact_ivf_index_manifest``: every
     :func:`upsert_lsh_index_batch` lands ``n_buckets`` files in its own
     ``ingest_batch`` partition, so after B batches the table is B×32
     files and each per-batch incremental scan pays open/footer/listing
@@ -736,9 +736,12 @@ def ngram_jaccard_pairs(
         ).alias("p")
     )
     # n_a/n_b are functionally determined by id_a/id_b — grouping on all
-    # four keeps one aggregate and no first()/join
+    # four keeps one aggregate and no first()/join.  A repeated id whose
+    # rows carry different shingle counts is two set members, so it
+    # would otherwise pair with itself
     return (
         pair.select("p.id_a", "p.n_a", "p.id_b", "p.n_b")
+        .filter(F.col("id_a") != F.col("id_b"))
         .groupBy("id_a", "n_a", "id_b", "n_b")
         .agg(F.count("*").cast("long").alias("n_common"))
         .select(

@@ -533,11 +533,12 @@ def q_ann_ivf_quantized(
     the rerank stage re-scores only those candidates with exact float
     cosine (the pushed-down candidate-id fetch) — both stages through the
     REAL serving operator (``ann_ivf_index_topk_quantized``; the index
-    relation stands in for the cell-partitioned parquet, whose partition
-    pruning is plan-asserted in test_similarity.py).  Value-oracled: the
-    integer code arithmetic is exact in doubles (see ``q_ann_topk``), so
-    candidate sets and the reranked top-3 are bit-identical across
-    engines.  ``trained`` as in :func:`q_ann_ivf_trained`."""
+    relation stands in for the at-rest ``operators.ivf_store`` index,
+    whose partition and column pruning are plan-asserted in
+    tests/test_similarity.py::test_quantized_ivf_index_serving_prunes_floats_and_reranks_exactly).
+    Value-oracled: the integer code arithmetic is exact in doubles (see
+    ``q_ann_topk``), so candidate sets and the reranked top-3 are
+    bit-identical across engines.  ``trained`` as in :func:`q_ann_ivf_trained`."""
     em = load_table(spark, sf_dir, "embeddings")
     if trained is None:
         trained = kmeans_refine(em, ivf_seed_centroids(em, 16), iters=1)

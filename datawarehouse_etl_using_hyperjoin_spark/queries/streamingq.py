@@ -123,7 +123,7 @@ def stream_tumbling_state_bytes(spark: SparkSession, sf_dir: str) -> int:
     window size times the type cardinality — ONE tiny aggregate over the
     fixture (runs once per bench process, outside the timed passes),
     never by event volume."""
-    from ..streaming.pipeline import estimate_row_bytes
+    from ..streaming.pipeline import EVENT_WINDOW_SECONDS, estimate_row_bytes
 
     ev = with_event_time(load_table(spark, sf_dir, "events"))
     row = ev.agg(
@@ -133,9 +133,9 @@ def stream_tumbling_state_bytes(spark: SparkSession, sf_dir: str) -> int:
     ).first()
     if row.lo is None:
         return 0
-    hours = int((row.hi - row.lo).total_seconds() // 3600) + 1
+    windows = int((row.hi - row.lo).total_seconds() // EVENT_WINDOW_SECONDS) + 1
     width = estimate_row_bytes(windowed_event_counts(ev).schema)
-    return hours * int(row.k) * width
+    return windows * int(row.k) * width
 
 
 def stream_tumbling_df(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -188,11 +188,10 @@ def compact_table(
     packed independently by the writer).
 
     ``transform`` (optional, DataFrame → DataFrame) is applied to the
-    read relation before packing — the hook schema-migration passes use
-    to piggyback a column backfill on the rewrite they were going to pay
-    for anyway (e.g. :func:`...operators.similarity.compact_ivf_index`
-    adding ``cell_id`` to a pre-r9 index).  It must be row-preserving;
-    the returned ``rows`` count is taken AFTER the transform.
+    read relation before packing, so a column rewrite rides on the pass
+    (:func:`...operators.corpus.compact_corpus` relabels the merged
+    batches to one epoch).  It must be row-preserving; the returned
+    ``rows`` count is taken AFTER the transform.
     """
     import math
     import os

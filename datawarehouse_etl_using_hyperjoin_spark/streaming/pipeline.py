@@ -81,11 +81,17 @@ def consume_once(
     return stream.withWatermark(col, delay).dropDuplicatesWithinWatermark(key_cols)
 
 
+#: default tumbling window of :func:`windowed_event_counts`, in seconds;
+#: ``queries.streamingq.stream_tumbling_state_bytes`` counts live windows
+#: with the same constant
+EVENT_WINDOW_SECONDS = 3600
+
+
 def windowed_event_counts(
     events: DataFrame,
     *,
     ts_col: str = "ts",
-    window: str = "1 hour",
+    window: str = f"{EVENT_WINDOW_SECONDS} seconds",
     slide: str | None = None,
     watermark: str = "30 minutes",
 ) -> DataFrame:
@@ -407,7 +413,9 @@ def run_to_noop(
     Returns summed engine-reported micro-batch metrics from the progress
     events: {"n_batches", "input_rows", "batch_duration_ms_sum"} — the
     per-batch durations let fixed trigger overhead be separated from
-    per-row throughput."""
+    per-row throughput.  The query keeps only the newest
+    ``spark.sql.streaming.numRecentProgressUpdates`` events; a drain with
+    more batches than that raises instead of returning an under-count."""
     spark = df.sparkSession
     if state_partitions == "auto":
         if projected_state_bytes is None:
@@ -424,14 +432,25 @@ def run_to_noop(
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
+    progress = q.recentProgress
+    q.stop()
+    # the query starts at batch 0, so a later first event means the
+    # buffer already dropped events
+    if progress and progress[0]["batchId"] > 0:
+        raise RuntimeError(
+            "run_to_noop: the progress buffer dropped the events of the "
+            f"first {progress[0]['batchId']} batches, so the summed metrics "
+            "would under-count — raise "
+            "spark.sql.streaming.numRecentProgressUpdates above the "
+            "drain's batch count"
+        )
     n, rows, dur, instances = 0, 0, 0, 0
-    for prog in q.recentProgress:
+    for prog in progress:
         n += 1
         rows += prog.get("numInputRows") or 0
         dur += (prog.get("durationMs") or {}).get("triggerExecution") or 0
         for op in prog.get("stateOperators") or []:
             instances = max(instances, op.get("numStateStoreInstances") or 0)
-    q.stop()
     return {
         "n_batches": n,
         "input_rows": rows,

@@ -124,6 +124,23 @@ def test_ngram_jaccard_scores_injected_dups_high(spark, sf_dir):
     assert pairs.filter((F.col("jaccard") < 0) | (F.col("jaccard") > 1)).count() == 0
 
 
+def test_ngram_jaccard_never_pairs_an_id_with_itself(spark):
+    """A repeated id whose rows carry different shingle counts is two
+    members of each shared bucket; it must not come out as an (id, id)
+    pair."""
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha beta gamma delta epsilon"),
+            (1, "alpha beta gamma delta"),
+            (2, "alpha beta gamma delta zeta"),
+        ],
+        ["doc_id", "text"],
+    ).withColumn("block", F.lit(1))
+    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", "block", 3)
+    ids = {(r.id_a, r.id_b) for r in pairs.collect()}
+    assert ids == {(1, 2)}
+
+
 def _synthetic_pairs(spark, n_pairs, shared, fresh, tag):
     """n_pairs doc pairs with controlled word-set Jaccard:
     shared/(shared + 2*fresh).  Word vocab is disjoint across pairs."""

@@ -1,14 +1,14 @@
-"""Manifest-backed IVF store: the rename-free object-store-safe lifecycle.
+"""The at-rest IVF index store: the rename-free object-store-safe lifecycle.
 
 VERDICT r10 "Next" #3 pins the contract: a manifest-generation read path
 plus split/compact via fresh-path rewrite, **tested by simulating
 rename-unavailability** (os.rename/os.replace/shutil.move banned for the
-whole manifest pipeline), with results bit-equal to the local-fs
-rename-based path.  Plus the protocol's own claims: publish is the one
-commit point (crash-before-publish is invisible and retry-safe), an
-interrupted multi-cell split stays consistent per cell (no sentinel, no
-recovery op, quantizer and cells always paired), and vacuum reclaims
-exactly the unreferenced generations.
+whole pipeline), with results bit-equal to the same lifecycle rebuilt in
+memory.  Plus the protocol's own claims: publish is the one commit point
+(crash-before-publish is invisible and retry-safe), an interrupted
+multi-cell split stays consistent per cell (no sentinel, no recovery
+op, quantizer and cells always paired), and vacuum reclaims exactly the
+unreferenced generations.
 """
 
 from __future__ import annotations
@@ -33,8 +33,7 @@ from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
     ann_ivf_index_topk,
     ivf_assign,
     ivf_seed_centroids,
-    read_ivf_index,
-    write_ivf_index,
+    kmeans_refine,
 )
 from datawarehouse_etl_using_hyperjoin_spark.sources.fixtures import load_table
 
@@ -68,41 +67,54 @@ def _cents(df):
 
 
 @pytest.mark.slow  # soak tier (pytest.ini): run with -m ""
-def test_manifest_lifecycle_bit_equal_to_rename_lifecycle_without_renames(
+def test_manifest_lifecycle_bit_equal_to_in_memory_rebuild_without_renames(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """The full lifecycle — build, incremental append, hot-cell split,
-    compaction, serve — run through the manifest store with every rename
-    primitive monkeypatched to raise, against the SAME inputs as the
-    directory-layout (rename-based) store: final index rows, quantizer,
-    and ANN serving results are identical."""
+    compaction, serve — run through the store with every rename
+    primitive monkeypatched to raise, against the SAME lifecycle rebuilt
+    in memory from the operators it composes (assign everything under
+    the build quantizer; Lloyd-split the hot cell into fresh ids above
+    the quantizer's; reassign only that cell): final index rows,
+    quantizer, and ANN serving results are identical."""
+    from pyspark.sql import Window
+
     em = load_table(spark, sf_dir, "embeddings")
     base = em.filter(F.col("vec_id") % 2 == 0)
     extra = em.filter(F.col("vec_id") % 2 == 1)
     cent0 = ivf_seed_centroids(base, 2).localCheckpoint(eager=True)
 
-    # reference pipeline: directory layout, rename-based maintenance
-    dpath = str(tmp_path / "ivf_dir")
-    write_ivf_index(ivf_assign(base, cent0), dpath, sort_by="vec_id")
-    write_ivf_index(ivf_assign(extra, cent0), dpath, mode="append")
+    # expected state, in memory
+    assigned = ivf_assign(em, cent0).localCheckpoint(eager=True)
     sizes = {
         int(r.centroid_id): r["count"]
-        for r in read_ivf_index(spark, dpath)
-        .groupBy("centroid_id").count().collect()
+        for r in assigned.groupBy("centroid_id").count().collect()
     }
-    max_rows = max(sizes.values()) - 1  # the hot cell is oversized
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        compact_ivf_index,
-        ivf_split_oversized,
+    hot = max(sizes, key=sizes.get)
+    max_rows = sizes[hot] - 1  # only the hot cell is oversized
+    cell = assigned.filter(F.col("centroid_id") == hot).drop("centroid_id")
+    next_id = 1 + max(int(r.centroid_id) for r in cent0.collect())
+    sub = (
+        kmeans_refine(cell, ivf_seed_centroids(cell, 2), iters=2)
+        .withColumn(
+            "centroid_id",
+            (F.lit(next_id) - 1 + F.row_number().over(
+                Window.orderBy("centroid_id")
+            )).cast("long"),
+        )
+        .withColumn(
+            "centroid", F.col("centroid").cast(cent0.schema["centroid"].dataType)
+        )
+        .localCheckpoint(eager=True)
+    )
+    cent_want = cent0.filter(F.col("centroid_id") != hot).unionByName(sub)
+    idx_want = (
+        assigned.filter(F.col("centroid_id") != hot)
+        .unionByName(ivf_assign(cell, sub))
+        .withColumn("cell_id", F.col("centroid_id"))
     )
 
-    cent_dir_layout = ivf_split_oversized(
-        spark, dpath, cent0, max_rows=max_rows, k=2
-    )
-    compact_ivf_index(spark, dpath)
-    idx_dir = read_ivf_index(spark, dpath)
-
-    # manifest pipeline: renames BANNED throughout
+    # the store's pipeline: renames BANNED throughout
     mroot = str(tmp_path / "ivf_manifest")
     with monkeypatch.context() as mp:
         _ban_renames(mp)
@@ -113,14 +125,14 @@ def test_manifest_lifecycle_bit_equal_to_rename_lifecycle_without_renames(
         split = ivf_split_oversized_manifest(
             spark, mroot, max_rows=max_rows, k=2
         )
-        assert split  # the hot cell did split
+        assert split == [hot]
         compact_ivf_index_manifest(spark, mroot)
         idx_man = read_ivf_index_manifest(spark, mroot)
         cents_man = read_ivf_centroids(spark, mroot)
 
         # bit-equal state: rows, quantizer
-        assert _rows(idx_man) == _rows(idx_dir)
-        assert _cents(cents_man) == _cents(cent_dir_layout)
+        assert _rows(idx_man) == _rows(idx_want)
+        assert _cents(cents_man) == _cents(cent_want)
 
         # identical serving results through the SAME plan
         q = em.filter(F.col("vec_id") < 6)
@@ -133,13 +145,10 @@ def test_manifest_lifecycle_bit_equal_to_rename_lifecycle_without_renames(
         want = {
             (r.query_id, r.rank): (r.neighbor_id, round(r.cos, 9))
             for r in ann_ivf_index_topk(
-                q, idx_dir, cent_dir_layout, k=3, nprobe=2
+                q, idx_want, cent_want, k=3, nprobe=2
             ).collect()
         }
         assert got == want
-
-        # one read entry point: read_ivf_index auto-detects the layout
-        assert _rows(read_ivf_index(spark, mroot)) == _rows(idx_man)
 
 
 def test_publish_is_the_commit_point_crash_invisible_retry_exactly_once(
@@ -147,7 +156,7 @@ def test_publish_is_the_commit_point_crash_invisible_retry_exactly_once(
 ):
     """An append that crashes AFTER its data write but BEFORE publish is
     invisible to readers (no torn state, no sentinel, no refusal —
-    unlike the dir layout there is nothing to recover); the retried
+    there is nothing to recover); the retried
     append lands the batch exactly once."""
     em = load_table(spark, sf_dir, "embeddings")
     base = em.filter(F.col("vec_id") % 2 == 0)
@@ -180,8 +189,7 @@ def test_interrupted_split_commits_per_cell_and_rerun_completes(
     """A split pass killed between cells leaves every completed cell
     committed and the interrupted cell fully live pre-split — quantizer
     and cells stay a consistent pair (the manifest commits both
-    together), which the dir layout cannot promise (its caller holds the
-    centroid relation).  Re-running completes; vacuum then reclaims the
+    together).  Re-running completes; vacuum then reclaims the
     orphan subcell dirs and superseded generations without touching the
     live state."""
     em = load_table(spark, sf_dir, "embeddings")
@@ -257,21 +265,6 @@ def test_interrupted_split_commits_per_cell_and_rerun_completes(
     assert on_disk == live_pairs
 
 
-def test_layout_guards_refuse_mixing(spark, sf_dir, tmp_path):
-    em = load_table(spark, sf_dir, "embeddings")
-    cent = ivf_seed_centroids(em, 2)
-
-    mroot = str(tmp_path / "man")
-    write_ivf_index_manifest(em, mroot, centroids=cent)
-    with pytest.raises(ValueError, match="manifest-layout"):
-        write_ivf_index(ivf_assign(em, cent), mroot, mode="append")
-
-    droot = str(tmp_path / "dir")
-    write_ivf_index(ivf_assign(em, cent), droot)
-    with pytest.raises(ValueError, match="directory-layout"):
-        write_ivf_index_manifest(em, droot, centroids=cent)
-
-
 def test_torn_newest_manifest_reads_as_uncommitted(spark, sf_dir, tmp_path):
     """A truncated newest manifest (a torn LOCAL publish; impossible on
     object stores where PUT is atomic) must read as 'not yet committed':
@@ -294,7 +287,7 @@ def test_batch_ledger_makes_streaming_append_exactly_once(
 ):
     """The manifest's batch ledger closes the re-delivery-AFTER-publish
     window (checkpoint commit lost once the manifest already landed) —
-    the window plain appends duplicate into in both layouts.  The ledger
+    the window a plain append duplicates into.  The ledger
     survives compaction AND a full rebuild, so stale re-deliveries stay
     no-ops forever."""
     em = load_table(spark, sf_dir, "embeddings")
@@ -333,7 +326,7 @@ def test_manifest_read_keeps_partition_pruning(spark, sf_dir, tmp_path):
     pruned from the FILE LISTING — must survive the manifest read's
     multi-root construction: the probe filter reaches PartitionFilters
     and the executed scan reads strictly fewer files than the index
-    holds, exactly as on the dir layout."""
+    holds."""
     from datawarehouse_etl_using_hyperjoin_spark.plans.inspect import (
         plan_string,
     )
@@ -530,58 +523,6 @@ def test_ivf_store_model_under_random_ops_and_crashes(
             for r in s.read_ivf_centroids(spark, root).collect()
         }
         assert live_cells <= cent_ids  # every data cell has its centroid
-
-
-def test_migration_from_dir_layout_preserves_index_and_serving(
-    spark, sf_dir, tmp_path
-):
-    """migrate_ivf_index_to_manifest: the manifest copy holds the SAME
-    rows and serves identically; a drifted caller-held quantizer (cells
-    in the index missing from the relation) is refused loudly; the
-    migrated store then appends/compacts like a native one."""
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        migrate_ivf_index_to_manifest,
-    )
-
-    em = load_table(spark, sf_dir, "embeddings")
-    cent = ivf_seed_centroids(em, 2).localCheckpoint(eager=True)
-    dpath = str(tmp_path / "src_dir")
-    write_ivf_index(ivf_assign(em, cent), dpath, sort_by="vec_id")
-
-    root = str(tmp_path / "migrated")
-    migrate_ivf_index_to_manifest(spark, dpath, root, centroids=cent)
-    assert _rows(read_ivf_index_manifest(spark, root)) == _rows(
-        read_ivf_index(spark, dpath)
-    )
-    q = em.filter(F.col("vec_id") < 4)
-    a = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in ann_ivf_index_topk(
-            q, read_ivf_index_manifest(spark, root),
-            read_ivf_centroids(spark, root), k=3, nprobe=2,
-        ).collect()
-    }
-    b = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in ann_ivf_index_topk(
-            q, read_ivf_index(spark, dpath), cent, k=3, nprobe=2
-        ).collect()
-    }
-    assert a == b
-    # native lifecycle works on the migrated store
-    extra = em.withColumn("vec_id", F.col("vec_id") + 40_000)
-    assert ivf_append_manifest(extra, root, batch_id=1) is not None
-    assert read_ivf_index_manifest(spark, root).count() == 2 * em.count()
-
-    # drifted quantizer refused
-    with pytest.raises(ValueError, match="drifted"):
-        migrate_ivf_index_to_manifest(
-            spark, dpath, str(tmp_path / "m2"),
-            centroids=cent.filter(F.col("centroid_id") == 0),
-        )
-    # occupied root refused
-    with pytest.raises(ValueError, match="already holds"):
-        migrate_ivf_index_to_manifest(spark, dpath, root, centroids=cent)
 
 
 def test_snapshot_reads_pair_quantizer_with_cells(spark, sf_dir, tmp_path):

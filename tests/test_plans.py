@@ -3,6 +3,8 @@ where intended, pushdown reaching the scan, no Python in JVM-only paths."""
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from datawarehouse_etl_using_hyperjoin_spark.operators.etl import hyperjoin
@@ -217,19 +219,25 @@ def test_extension_query_plan_shapes(spark, sf_dir):
     # >= defaultParallelism splits, i.e. at any real scale; measured
     # 1.37 s -> 0.77 s at sf0.1), so the zero-SHUFFLE-growth claim is
     # pinned as "no hash exchange" rather than "no exchange node".
-    plan = plan_string(q_repetition_metrics(spark, sf_dir))
-    for marker in (
-        "Exchange hashpartitioning", "Exchange rangepartitioning",
-        "Join", "BatchEvalPython", "MapInPandas",
-    ):
-        assert marker not in plan, f"{marker} in q_repetition_metrics plan"
-    # every Exchange NODE must be the one conditional round-robin — pin
-    # the partitioning kind, not a raw substring count, so a formatting
-    # change in explain output cannot silently loosen the lock (ADVICE r14)
+    # "simple" mode: it prints the partitioning on the Exchange line
+    # ("Exchange RoundRobinPartitioning(8)"); the formatted mode moves
+    # it to a separate Arguments line, where nothing would match.
     import re
 
-    kinds = set(re.findall(r"Exchange (\w+)", plan))
-    assert kinds <= {"roundrobinpartitioning"}, plan
+    def assert_projection_only(df):
+        plan = plan_string(df, "simple")
+        for marker in ("Join", "BatchEvalPython", "MapInPandas"):
+            assert marker not in plan, f"{marker} in q_repetition_metrics plan"
+        # every Exchange NODE must be the one conditional round-robin —
+        # pin the partitioning kind, not a raw substring count (ADVICE r14)
+        kinds = {k.lower() for k in re.findall(r"Exchange (\w+)", plan)}
+        assert kinds <= {"roundrobinpartitioning"}, plan
+
+    rep = q_repetition_metrics(spark, sf_dir)
+    assert_projection_only(rep)
+    # positive control: a hash repartition must trip the lock
+    with pytest.raises(AssertionError, match="hashpartitioning"):
+        assert_projection_only(rep.repartition(8, rep.columns[0]))
 
     # mixture sampling: filter + generate only — membership/copy decisions
     # are per-row hash arithmetic, nothing moves between partitions

@@ -634,6 +634,30 @@ def test_run_to_noop_state_partitions_knob(spark, events_stream_dir):
     assert tuned["input_rows"] == default["input_rows"]
 
 
+def test_run_to_noop_refuses_to_under_count_dropped_progress(
+    spark, txn_stream_dir
+):
+    """run_to_noop sums the query's progress buffer, which keeps only the
+    newest spark.sql.streaming.numRecentProgressUpdates events: a drain
+    of more batches than that must raise, not return an under-count."""
+    from datawarehouse_etl_using_hyperjoin_spark.streaming.pipeline import (
+        run_to_noop,
+    )
+
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        with pytest.raises(RuntimeError, match="numRecentProgressUpdates"):
+            run_to_noop(  # 4 one-file triggers, 2 retained events
+                read_parquet_stream(
+                    spark, txn_stream_dir, max_files_per_trigger=1
+                )
+            )
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_choose_state_partitions_sizing_rule():
     """The query-birth sizing rule (SCALE.md): parallelism/8 floor for
     small state, memory-bounded growth for large state, hard cap."""

@@ -16,7 +16,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers (UDF / pandas stages) import the package too: they are
+# separate processes, so they need the checkout on PYTHONPATH, set before
+# the session starts them
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from datawarehouse_etl_using_hyperjoin_spark.queries import load_registry
 from datawarehouse_etl_using_hyperjoin_spark.session import get_spark

@@ -602,10 +602,11 @@ def measure_ivf_hotcell(
     every probe touching it pays that cell's full size and nprobe stops
     mattering.  Builds the at-rest index over a skewed corpus, serves
     queries that live INSIDE the hot blob (the worst case — they always
-    probe the hot cell), then applies :func:`ivf_split_oversized` and
-    serves the same queries against the SAME directory with the updated
-    centroids.  Split passes loop until no cell is oversized (one pass
-    splits each oversized cell k-ways; a 50%-of-corpus cell needs two).
+    probe the hot cell), then applies
+    :func:`ivf_split_oversized_manifest` and serves the same queries
+    against the SAME index with its updated quantizer.  Split passes
+    loop until no cell is oversized (one pass splits each oversized cell
+    k-ways; a 50%-of-corpus cell needs two).
 
     Reports the cell-size histogram, recall vs exact brute force, wall,
     read bytes, and — the number the split actually re-bounds —
@@ -618,16 +619,18 @@ def measure_ivf_hotcell(
     number to watch alongside the cost drop."""
     from pyspark.sql import Window
 
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        ivf_split_oversized_manifest,
+        read_ivf_centroids,
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk,
         cosine,
         cosine_topk,
-        ivf_assign,
         ivf_seed_centroids,
-        ivf_split_oversized,
         kmeans_refine,
-        read_ivf_index,
-        write_ivf_index,
     )
 
     q = vecs.filter(F.col("vec_id") < n_queries).localCheckpoint(eager=True)
@@ -639,13 +642,13 @@ def measure_ivf_hotcell(
         vecs, ivf_seed_centroids(vecs, n_cells), iters=lloyd_iters
     ).localCheckpoint(eager=True)
     root = tempfile.mkdtemp(prefix="scale_probe_ivfhot_") + "/index"
-    write_ivf_index(ivf_assign(vecs, cent), root, sort_by="vec_id")
+    write_ivf_index_manifest(vecs, root, centroids=cent)
 
     def sizes():
         return sorted(
             (
                 r["count"]
-                for r in spark.read.parquet(root)
+                for r in read_ivf_index_manifest(spark, root)
                 .groupBy("centroid_id").count().collect()
             ),
             reverse=True,
@@ -671,14 +674,15 @@ def measure_ivf_hotcell(
             .filter(F.col("__rn") <= nprobe)
             .select("query_id", "centroid_id")
         )
-        sz = spark.read.parquet(root).groupBy("centroid_id").count()
+        sz = read_ivf_index_manifest(spark, root).groupBy("centroid_id").count()
         return int(
             probed.join(sz, on="centroid_id").agg(F.sum("count")).first()[0]
         )
 
     def serve(centroids):
         df = ann_ivf_index_topk(
-            q, read_ivf_index(spark, root), centroids, k=k, nprobe=nprobe
+            q, read_ivf_index_manifest(spark, root), centroids, k=k,
+            nprobe=nprobe,
         )
         m = run_metered(spark, df)
         got = {
@@ -693,17 +697,15 @@ def measure_ivf_hotcell(
     max_rows = int(n_total / n_cells * 2)
     before_sizes = sizes()
     before = serve(cent)
-    new_cent, passes = cent, 0
+    passes = 0
     while passes < 6:
-        nxt = ivf_split_oversized(
-            spark, root, new_cent, max_rows=max_rows, k=split_k
-        )
         passes += 1
-        if nxt is new_cent:  # nothing oversized -> relation unchanged
-            break
-        new_cent = nxt
+        if not ivf_split_oversized_manifest(
+            spark, root, max_rows=max_rows, k=split_k
+        ):
+            break  # nothing oversized
     after_sizes = sizes()
-    after = serve(new_cent)
+    after = serve(read_ivf_centroids(spark, root).localCheckpoint(eager=True))
     return {
         "n_vectors": n_total,
         "n_queries": n_queries,
@@ -729,21 +731,22 @@ def measure_ivf_index(
     100 TB."""
     import tempfile as _tf
 
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk,
         ann_ivf_topk,
         cosine_topk,
-        ivf_assign,
         ivf_seed_centroids,
-        read_ivf_index,
-        write_ivf_index,
     )
 
     cent = ivf_seed_centroids(vecs, n_cells).persist()
     cent.count()
     path = _tf.mkdtemp(prefix="scale_probe_ivf_") + "/index"
-    write_ivf_index(ivf_assign(vecs, cent), path)
-    index = read_ivf_index(spark, path)
+    write_ivf_index_manifest(vecs, path, centroids=cent)
+    index = read_ivf_index_manifest(spark, path)
     q = vecs.filter(F.col("vec_id") < n_queries)
 
     at_rest = run_metered(
@@ -837,22 +840,24 @@ def measure_ivf_quantized(
     metering is unavailable, i.e. non-Linux / Spark Connect), and
     recall@k vs exact brute force, for (a) the float
     index, (b) codes-only quantized serving, (c) quantized + float rerank
-    of 4k candidates.  The quantized index stores BOTH codes and floats;
+    of 4k candidates.  The quantized index stores BOTH codes and floats
+    (the codes ride along as index payload);
     parquet column pruning keeps the float pages unread in stage 1, so
     variant (c) buys back float-exact ordering for a query-bound extra
     read."""
     import tempfile as _tf
 
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk,
         ann_ivf_index_topk_quantized,
         cosine_topk,
-        ivf_assign,
         ivf_seed_centroids,
         kmeans_refine,
         quantize_embeddings,
-        read_ivf_index,
-        write_ivf_index,
     )
 
     q = vecs.filter(F.col("vec_id") < n_queries).localCheckpoint(eager=True)
@@ -863,17 +868,16 @@ def measure_ivf_quantized(
     cent = kmeans_refine(
         vecs, ivf_seed_centroids(vecs, n_cells), iters=lloyd_iters
     ).localCheckpoint(eager=True)
-    assigned = ivf_assign(vecs, cent)
     root = _tf.mkdtemp(prefix="scale_probe_ivfq_")
-    write_ivf_index(assigned, root + "/float")
-    # id-sorted cells: narrow row-group id ranges let the rerank stage's
-    # candidate-id fetch skip row groups (only bites once cells span
-    # multiple row groups — free either way)
-    write_ivf_index(
-        quantize_embeddings(assigned), root + "/quant", sort_by="vec_id"
+    write_ivf_index_manifest(vecs, root + "/float", centroids=cent)
+    # cells are (cell, id)-sorted in every generation: narrow row-group
+    # id ranges let the rerank stage's candidate-id fetch skip row groups
+    # (only bites once cells span multiple row groups)
+    write_ivf_index_manifest(
+        quantize_embeddings(vecs), root + "/quant", centroids=cent
     )
-    idx_f = read_ivf_index(spark, root + "/float")
-    idx_q = read_ivf_index(spark, root + "/quant")
+    idx_f = read_ivf_index_manifest(spark, root + "/float")
+    idx_q = read_ivf_index_manifest(spark, root + "/quant")
 
     def recall(df) -> float:
         got = {
@@ -893,14 +897,14 @@ def measure_ivf_quantized(
             q, idx_q, cent, k=k, nprobe=nprobe, rerank=4 * k
         ),
     }
-    def column_mb(path: str) -> dict[str, float]:
-        import glob as _glob
+    def column_mb(idx) -> dict[str, float]:
+        from urllib.parse import urlparse
 
         import pyarrow.parquet as _pq
 
         tot: dict[str, int] = {}
-        for f in _glob.glob(path + "/centroid_id=*/*.parquet"):
-            md = _pq.ParquetFile(f).metadata
+        for f in idx.inputFiles():
+            md = _pq.ParquetFile(urlparse(f).path).metadata
             for rg in range(md.num_row_groups):
                 g = md.row_group(rg)
                 for ci in range(g.num_columns):
@@ -917,7 +921,7 @@ def measure_ivf_quantized(
         "nprobe": nprobe,
         # at-rest column footprint: the byte ratio that rules once cell
         # files are GB-sized and per-file overhead amortizes away
-        "index_column_mb": column_mb(root + "/quant"),
+        "index_column_mb": column_mb(idx_q),
     }
     for name, make in variants.items():
         m = run_metered(spark, make())
@@ -931,80 +935,89 @@ def measure_ivf_rowgroup_skip(
     nprobe: int = 4, rerank_mult: int = 4, lloyd_iters: int = 1,
     block_bytes: int = 128 << 10, page_bytes: int = 32 << 10,
 ) -> dict[str, object]:
-    """VERDICT r9 item 3: prove the id-sorted-cell row-group-skipping
-    claim with cells that actually SPAN multiple row groups (the r8
-    probe's 256-cell point was footer-dominated — single row group per
-    cell, 'identical numbers at probe scale as expected').
+    """Row-group skipping of the quantized rerank fetch on the at-rest
+    IVF index, with cells that actually SPAN many row groups.
 
     Simulates the GB-cell regime by shrinking ``parquet.block.size``
-    instead of inflating rows (same row-groups-per-cell geometry, probe
-    cost): each cell holds tens of row groups, candidates per cell ≪ row
-    groups per cell — the regime where skipping can bite.  Measures the
+    (set in the session conf, which every parquet write picks up)
+    instead of inflating rows.  The index is built from half the
+    vectors, appended with the other half, then compacted: the
+    compaction merges both generations into one (cell, id)-sorted file
+    per cell holding tens of row groups — candidates per cell ≪ row
+    groups per cell, the regime where skipping can bite.  Measures the
     REAL operator's rerank candidate fetch (stage 1 runs eagerly at
     construction via the operator's bounded collect, so ``run_metered``
-    on the returned frame meters the fetch) across the matrix
-    {insertion-order, id-sorted} × {global In at Spark's default
-    threshold 10 (degraded to a [min,max] range), global In at the
-    engine threshold (real In predicate), per-cell cell_local
-    predicate}.  What r9 established (and this probe pins): a GLOBAL
-    candidate list cannot skip id-sorted row groups at all — cell
-    membership is a similarity property, so every ~rows·C-wide sorted
-    id range contains some other cell's candidate — and only
-    sorted+cell_local drops read bytes; cell_local on the unsorted
-    layout is a measured PESSIMIZATION (column-index two-pass, zero
-    skips).  Results must be identical across all variants.  read_mb is
-    null on non-Linux (see :func:`run_metered`)."""
-    import glob as _glob
+    on the returned frame meters the fetch) for three predicates:
+    global In at Spark's default threshold 10 (degraded to a [min,max]
+    range), global In at the engine threshold (a real In), and the
+    per-cell ``cell_local`` predicate.  A GLOBAL candidate list cannot
+    skip id-sorted row groups — cell membership is a similarity
+    property, so every ~rows·C-wide sorted id range contains some other
+    cell's candidate — so only cell_local should drop read bytes.
+    Results must be identical across all variants.  read_mb is null on
+    non-Linux (see :func:`run_metered`)."""
+    from urllib.parse import urlparse
 
     import pyarrow.parquet as _pq
 
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        compact_ivf_index_manifest,
+        ivf_append_manifest,
+        read_ivf_centroids,
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk_quantized,
-        ivf_assign,
         ivf_seed_centroids,
         kmeans_refine,
         quantize_embeddings,
-        read_ivf_index,
-        write_ivf_index,
     )
 
     q = vecs.filter(F.col("vec_id") < n_queries).localCheckpoint(eager=True)
     cent = kmeans_refine(
         vecs, ivf_seed_centroids(vecs, n_cells), iters=lloyd_iters
     ).localCheckpoint(eager=True)
-    # one writer task per cell → ONE file per cell directory holding many
-    # row groups (without this, every input partition writes its own
-    # sliver per cell and both layouts degenerate to wide-id-range
-    # two-row-group files — the r8 footer-dominated geometry again)
-    quant = (
-        quantize_embeddings(ivf_assign(vecs, cent))
-        .repartition(n_cells, F.col("centroid_id"))
-        .localCheckpoint(eager=True)
-    )
-    root = tempfile.mkdtemp(prefix="scale_probe_ivfrg_")
-    opts = {
+    quant = quantize_embeddings(vecs).localCheckpoint(eager=True)
+    root = tempfile.mkdtemp(prefix="scale_probe_ivfrg_") + "/index"
+    block_keys = {
         "parquet.block.size": str(block_bytes),
         "parquet.page.size": str(page_bytes),
     }
-    write_ivf_index(quant, root + "/unsorted", writer_options=opts)
-    write_ivf_index(
-        quant, root + "/sorted", sort_by="vec_id", writer_options=opts
-    )
+    saved = {key: spark.conf.get(key, None) for key in block_keys}
+    for key, v in block_keys.items():
+        spark.conf.set(key, v)
+    try:
+        write_ivf_index_manifest(
+            quant.filter(F.col("vec_id") % 2 == 0), root, centroids=cent
+        )
+        ivf_append_manifest(
+            quant.filter(F.col("vec_id") % 2 == 1), root, batch_id=1
+        )
+        compaction = compact_ivf_index_manifest(spark, root)
+    finally:
+        for key, v in saved.items():
+            if v is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, v)
+    idx = read_ivf_index_manifest(spark, root)
+    cent = read_ivf_centroids(spark, root).localCheckpoint(eager=True)
 
-    def cell_geometry(path: str) -> dict[str, float]:
+    def cell_geometry() -> dict[str, float]:
         """row groups per cell file + mean id-range width per row group
-        (the narrow-min/max evidence sorting is supposed to buy)."""
+        (the narrow-min/max evidence the (cell, id) sort buys)."""
         n_files, n_groups, widths = 0, 0, []
-        for f in _glob.glob(path + "/centroid_id=*/*.parquet"):
-            md = _pq.ParquetFile(f).metadata
+        for f in idx.inputFiles():
+            md = _pq.ParquetFile(urlparse(f).path).metadata
             n_files += 1
             n_groups += md.num_row_groups
-            idx = next(
+            col = next(
                 i for i in range(len(md.schema))
                 if md.schema.column(i).name == "vec_id"
             )
             for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
+                st = md.row_group(rg).column(col).statistics
                 if st is not None and st.has_min_max:
                     widths.append(st.max - st.min)
         return {
@@ -1026,10 +1039,8 @@ def measure_ivf_rowgroup_skip(
         "nprobe": nprobe,
         "rerank": rerank_mult * k,
         "parquet_block_bytes": block_bytes,
-        "geometry": {
-            "unsorted": cell_geometry(root + "/unsorted"),
-            "sorted": cell_geometry(root + "/sorted"),
-        },
+        "compaction": compaction,
+        "geometry": cell_geometry(),
     }
     results: dict[str, set] = {}
     variants = (
@@ -1037,29 +1048,27 @@ def measure_ivf_rowgroup_skip(
         ("global_in", "global", engine_thr),
         ("cell_local", "cell_local", engine_thr),
     )
-    for layout in ("unsorted", "sorted"):
-        idx = read_ivf_index(spark, f"{root}/{layout}")
-        for name, fetch, thr in variants:
-            spark.conf.set(thr_key, thr)
-            try:
-                df = ann_ivf_index_topk_quantized(
-                    q, idx, cent, k=k, nprobe=nprobe,
-                    rerank=rerank_mult * k, fetch=fetch,
-                )
-                m = run_metered(spark, df)
-                results[f"{layout}.{name}"] = {
-                    (r.query_id, r.neighbor_id, r.rank)
-                    for r in df.select(
-                        "query_id", "neighbor_id", "rank"
-                    ).collect()
-                }
-                out[f"{layout}_{name}"] = m
-            finally:
-                spark.conf.set(thr_key, engine_thr)
+    for name, fetch, thr in variants:
+        spark.conf.set(thr_key, thr)
+        try:
+            df = ann_ivf_index_topk_quantized(
+                q, idx, cent, k=k, nprobe=nprobe,
+                rerank=rerank_mult * k, fetch=fetch,
+            )
+            out[name] = run_metered(spark, df)
+            results[name] = {
+                (r.query_id, r.neighbor_id, r.rank)
+                for r in df.select("query_id", "neighbor_id", "rank").collect()
+            }
+        finally:
+            spark.conf.set(thr_key, engine_thr)
     first = next(iter(results.values()))
     out["results_invariant_across_variants"] = all(
         v == first for v in results.values()
     )
+    g, c = out["global_in"].get("read_mb"), out["cell_local"].get("read_mb")
+    if g and c is not None:
+        out["cell_local_vs_global_in_read"] = f"{(c - g) / g:+.0%}"
     return out
 
 
@@ -1801,98 +1810,6 @@ def measure_dim_write_amp(
             "batch_wall_sec": round(wall, 2),
         }
     return result
-
-
-def measure_ivf_manifest_overhead(
-    spark,
-    vecs,
-    *,
-    n_cells: int = 32,
-    n_queries: int = 64,
-    nprobe: int = 4,
-    n_appends: int = 8,
-) -> dict[str, dict]:
-    """r11: what the rename-free manifest commit protocol costs at SERVE
-    time.  Same vectors, same quantizer, both layouts; identical probe
-    (``ann_ivf_index_topk``) timed median-of-3 at three lifecycle points:
-    freshly built, after ``n_appends`` incremental batches (the manifest
-    index holds one generation dir per touched cell per append — the
-    aging worst case), and after compaction.  The manifest's extra
-    serve-time work is one LIST + one KB-scale GET (resolution) plus a
-    multi-dir file listing; everything else is the same pruned scan."""
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        compact_ivf_index_manifest,
-        ivf_append_manifest,
-        read_ivf_centroids,
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk,
-        compact_ivf_index,
-        ivf_append,
-        ivf_assign,
-        ivf_seed_centroids,
-        kmeans_refine,
-        read_ivf_index,
-    )
-
-    base = vecs.filter(F.col("vec_id") % (n_appends + 1) == 0)
-    cent = kmeans_refine(
-        base, ivf_seed_centroids(base, n_cells), iters=1
-    ).localCheckpoint(eager=True)
-    q = vecs.limit(n_queries).localCheckpoint(eager=True)
-
-    droot = tempfile.mkdtemp(prefix="ivfman_") + "/dir"
-    mroot = tempfile.mkdtemp(prefix="ivfman_") + "/man"
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        write_ivf_index,
-    )
-
-    write_ivf_index(ivf_assign(base, cent), droot, sort_by="vec_id")
-    write_ivf_index_manifest(base, mroot, centroids=cent, sort_by="vec_id")
-
-    def serve(layout: str) -> float:
-        walls = []
-        for _ in range(3):
-            t0 = time.time()
-            if layout == "dir":
-                idx, cc = read_ivf_index(spark, droot), cent
-            else:
-                idx = read_ivf_index_manifest(spark, mroot)
-                cc = read_ivf_centroids(spark, mroot)
-            ann_ivf_index_topk(q, idx, cc, k=3, nprobe=nprobe).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            walls.append(time.time() - t0)
-        return round(sorted(walls)[1], 2)
-
-    out: dict[str, dict] = {
-        "n_vecs": vecs.count(), "n_cells": n_cells,
-        "n_queries": n_queries, "nprobe": nprobe, "n_appends": n_appends,
-    }
-    out["fresh"] = {"dir_sec": serve("dir"), "manifest_sec": serve("man")}
-    for b in range(1, n_appends + 1):
-        batch = vecs.filter(F.col("vec_id") % (n_appends + 1) == b)
-        ivf_append(batch, cent, droot)
-        ivf_append_manifest(batch, mroot, batch_id=b)
-    out["aged"] = {
-        "dir_sec": serve("dir"), "manifest_sec": serve("man"),
-        "dir_files": len(read_ivf_index(spark, droot).inputFiles()),
-        "manifest_files": len(
-            read_ivf_index_manifest(spark, mroot).inputFiles()
-        ),
-    }
-    compact_ivf_index(spark, droot)
-    compact_ivf_index_manifest(spark, mroot)
-    out["compacted"] = {
-        "dir_sec": serve("dir"), "manifest_sec": serve("man"),
-        "dir_files": len(read_ivf_index(spark, droot).inputFiles()),
-        "manifest_files": len(
-            read_ivf_index_manifest(spark, mroot).inputFiles()
-        ),
-    }
-    return out
 
 
 def measure_fact_layout(
@@ -3692,29 +3609,6 @@ def main() -> None:
             n_rows=int(os.environ.get("SCALE_PROBE_ROWS", 8_000_000)),
             n_batches=int(os.environ.get("SCALE_PROBE_BATCHES", 16)),
             split_mb=float(os.environ.get("SCALE_PROBE_SPLIT_MB", 2)),
-        )}, indent=2))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "ivf_manifest":
-        spark = get_spark(
-            "scale-probe-ivfman",
-            cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-            extra_conf=METERED_SESSION_CONF,
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        vec_path = tempfile.mkdtemp(prefix="scale_probe_") + "/vectors"
-        synth_clustered_vectors(
-            spark, int(os.environ.get("SCALE_PROBE_VECS", 400_000)), 32,
-            vec_path,
-            n_blobs=int(os.environ.get("SCALE_PROBE_BLOBS", 32)),
-            spread=float(os.environ.get("SCALE_PROBE_SPREAD", 0.15)),
-        )
-        print(json.dumps({"ivf_manifest": measure_ivf_manifest_overhead(
-            spark,
-            spark.read.parquet(vec_path).localCheckpoint(eager=True),
-            n_cells=int(os.environ.get("SCALE_PROBE_CELLS", 32)),
-            n_queries=int(os.environ.get("SCALE_PROBE_QUERIES", 64)),
-            nprobe=int(os.environ.get("SCALE_PROBE_NPROBE", 4)),
-            n_appends=int(os.environ.get("SCALE_PROBE_APPENDS", 8)),
         )}, indent=2))
         return
     if len(sys.argv) > 1 and sys.argv[1] == "star_pipeline":
